@@ -51,17 +51,12 @@ from ..operators.text_stats import doc_stats, term_freq
 from .codec import varint_encode
 from .storage import (
     FORMAT_VERSION,
+    POSTINGS_SCHEMA,
     read_table,
     shuffle_n,
     sized_shuffle_n,
     table_path,
     write_table,
-)
-
-POSTINGS_SCHEMA = (
-    "term_id long, salt int, block_id int, n int, base long, max_doc_id long, "
-    "max_tf long, min_dl long, doc_ids_packed binary, "
-    "tfs_packed binary, dls_packed binary"
 )
 
 # serializes the session-global Arrow batch-size override around the encode
@@ -266,46 +261,6 @@ def _empty_postings_pdf(carry_part_id: bool = False) -> pd.DataFrame:
     return pd.DataFrame(cols)
 
 
-def aggregate_occurrences_pdf(
-    pdf: pd.DataFrame, presorted: bool = False
-) -> pd.DataFrame:
-    """(part_id, term_id, salt, doc_id, dl) occurrence rows → tf rows, all
-    numpy (lexsort + run-length reduce). Lets the build shuffle RAW
-    occurrences once instead of paying a separate tf-groupBy exchange —
-    the aggregation happens on the reduce side of the one shuffle, exactly
-    where the data already sits.
-
-    ``presorted`` = rows already ordered by (term_id, salt, doc_id) — the
-    single-shot build sorts on the JVM side of the exchange (Tungsten
-    radix sort, off-heap and cache-efficient), so the worker skips the
-    lexsort: random-access-heavy python sorting was the build's main
-    memory-bandwidth hog and the first thing to stop scaling when
-    multiple workers share a socket."""
-    term = pdf["term_id"].to_numpy(np.int64)
-    salt = pdf["salt"].to_numpy(np.int32)
-    doc = pdf["doc_id"].to_numpy(np.int64)
-    dl = pdf["dl"].to_numpy(np.int64)
-    part = pdf["part_id"].to_numpy(np.int32)
-    if not presorted:
-        order = np.lexsort((doc, salt, term))
-        term, salt, doc, dl, part = (
-            term[order], salt[order], doc[order], dl[order], part[order]
-        )
-    tid, sid, did, tfo, dlo, pid = _aggregate_occ_arrays(
-        term, salt, doc, dl, part
-    )
-    return pd.DataFrame(
-        {
-            "part_id": pid,
-            "term_id": tid,
-            "salt": sid,
-            "doc_id": did,
-            "tf": tfo,
-            "dl": dlo,
-        }
-    )
-
-
 def _aggregate_occ_arrays(
     term: np.ndarray,
     salt: np.ndarray,
@@ -339,8 +294,17 @@ def _encode_occ_map_fn(
     packed1_bits: tuple[int, int, int] | None = None,
 ):
     """mapInPandas fn: occurrence rows → in-worker tf aggregation → fused
-    posting blocks (single-shuffle build path). ``presorted`` — see
-    :func:`aggregate_occurrences_pdf`; Arrow batch boundaries never break
+    posting blocks (single-shuffle build path). The build shuffles RAW
+    occurrences once instead of paying a separate tf-groupBy exchange: the
+    aggregation happens on the reduce side of the one shuffle, where the
+    data already sits.
+
+    ``presorted`` = rows already ordered by (term_id, salt, doc_id) — the
+    single-shot build sorts on the JVM side of the exchange (Tungsten
+    radix sort, off-heap and cache-efficient), so the worker skips the
+    lexsort: random-access-heavy python sorting was the build's main
+    memory-bandwidth hog and the first thing to stop scaling when
+    multiple workers share a socket. Arrow batch boundaries never break
     ordering because the whole partition is concatenated first.
 
     The presorted path stays in numpy end-to-end (to_numpy views of the

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import math
 import time
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -39,7 +39,15 @@ from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from .codec import varint_decode
-from .storage import hash_parts, read_segments, read_table, table_path, tombstone_ids
+from .storage import (
+    dictionary_lookup,
+    hash_parts,
+    local_relation,
+    read_postings,
+    read_segments,
+    read_table,
+    tombstone_ids,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -92,7 +100,7 @@ def decode_postings(spark: SparkSession, index_dir: str, extra_cols: list[str] |
     table; must equal the enriched term_freq relation exactly (round-trip
     test, the analog of TestOnDiskGraphIndex write→load→search parity)."""
     carry = ["term_id"] + (extra_cols or [])
-    postings = read_table(spark, index_dir, "postings")
+    postings = read_postings(spark, index_dir)
     schema = ", ".join(
         {"term_id": "term_id long"}.get(c, f"{c} {'int' if c in ('salt','block_id','n') else 'long'}")
         for c in carry
@@ -104,49 +112,72 @@ def decode_postings(spark: SparkSession, index_dir: str, extra_cols: list[str] |
 # query prep
 # ---------------------------------------------------------------------------
 
+class _QueryTerm(NamedTuple):
+    """One (query, term) pair of the enriched query relation."""
+
+    query_id: object
+    term_id: int
+    weight: float
+    idf: float
+    n_salts: int
+
+
+def _idf(kind: str, n_docs: float, df: int) -> float:
+    """idf of a term in ``df`` of ``n_docs`` documents: the IEEE operations,
+    in order, of the Catalyst expression this replaced, so only the final
+    ``log`` can differ from Spark's (by at most 1 ulp)."""
+    if kind == "bm25":
+        # Robertson-Sparck-Jones (BM25) idf
+        return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+    # classic smoothed tf-idf idf (Q11's second exact kernel)
+    return math.log(1.0 + n_docs / df)
+
+
 def _query_spec(
     spark: SparkSession, index_dir: str, qterms: DataFrame, seg: dict,
     global_df: DataFrame | None = None,
     idf: str = "bm25",
 ):
-    """(qd_rows, qid_type, postings): the enriched query relation collected
-    driver-side (tiny — queries × terms), the caller relation's query_id
-    dtype, and the part-id-pruned postings scan.
+    """(qd_rows, qid_type, postings): the enriched query relation as a list
+    of :class:`_QueryTerm` (tiny — queries × terms), the caller relation's
+    query_id dtype, and the part-id-pruned postings scan.
+
+    The caller's ``qterms`` is collected once — the only Spark job of
+    planning — and joined on the driver to :func:`dictionary_lookup` of
+    just its terms; idf is computed there too. Every query path consumes
+    these same rows, so pruned and unpruned results stay exactly equal.
 
     ``global_df`` (term, df) overrides the shard-local document frequencies
     for idf — the sharded-index path computes idf from CORPUS-wide stats so
     per-shard scores are exact final scores (see ``index.sharded``);
-    ``seg['n_docs']`` is likewise already the global count there."""
-    dct = read_table(spark, index_dir, "dictionary").select(
-        "term", "term_id", "df", "n_salts"
-    )
-    if global_df is not None:
-        dct = dct.drop("df").join(global_df.select("term", "df"), "term")
-    # the enriched query relation is tiny (queries × terms): collect it ONCE
-    # and re-emit a local DataFrame for the broadcast join — no persist, so
-    # a long-running query loop pins zero executor storage (round-1 leak)
-    idf_col = (
-        # Robertson-Sparck-Jones (BM25) idf
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(seg["n_docs"])) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        )
-        if idf == "bm25"
-        # classic smoothed tf-idf idf (Q11's second exact kernel)
-        else F.log(F.lit(1.0) + F.lit(float(seg["n_docs"])) / F.col("df"))
-    )
-    qd_rows = (
-        qterms.join(dct, "term")
-        .withColumn("idf", idf_col)
-        .select("query_id", "term_id", "weight", "idf", "n_salts")
-        .collect()
-    )
+    ``seg['n_docs']`` is likewise already the global count there. Its rows
+    for the queried terms cost one more collect."""
+    q = qterms.select("query_id", "term", "weight").collect()
+    lookup = dictionary_lookup(index_dir, (r.term for r in q))
+    if global_df is not None and lookup:
+        gdf: dict[str, list[int]] = {}
+        for r in (
+            global_df.filter(F.col("term").isin(sorted(lookup)))
+            .select("term", "df")
+            .collect()
+        ):
+            gdf.setdefault(r.term, []).append(r.df)
+        # inner join semantics: a term missing from global_df drops out
+        lookup = {
+            t: [(tid, df, ns) for tid, _, ns in rows for df in gdf.get(t, ())]
+            for t, rows in lookup.items()
+        }
+    n_docs = float(seg["n_docs"])
+    qd_rows = [
+        _QueryTerm(r.query_id, tid, r.weight, _idf(idf, n_docs, df), ns)
+        for r in q
+        for tid, df, ns in lookup.get(r.term, ())
+    ]
     # which hive buckets hold these terms? resolved driver-side with the
     # bit-exact python twin of pmod(xxhash64(...)) — no throwaway Spark job
     pairs = [(int(r.term_id), s) for r in qd_rows for s in range(int(r.n_salts))]
     parts = hash_parts(pairs, int(seg["n_parts"])) if pairs else []
-    postings = read_table(spark, index_dir, "postings")
+    postings = read_postings(spark, index_dir)
     if parts:
         postings = postings.filter(F.col("part_id").isin(parts))
     qid_type = dict(qterms.dtypes).get("query_id", "int")
@@ -166,13 +197,15 @@ def _prepared_query_blocks(
     qd_rows, qid_type, postings = _query_spec(
         spark, index_dir, qterms, seg, global_df, idf
     )
-    # the enriched query relation is tiny (queries × terms): collect it ONCE
-    # and re-emit a local DataFrame for the broadcast join — no persist, so
-    # a long-running query loop pins zero executor storage (round-1 leak).
+    # the enriched query relation is tiny (queries × terms): re-emit it as
+    # an Arrow-backed local relation for the broadcast join — no job to
+    # build or broadcast it, and no persist, so a long-running query loop
+    # pins zero executor storage (round-1 leak).
     # Schema derives query_id's type from the caller's relation
     # (long/string query ids must round-trip unchanged); weight is coerced
     # to double so integer weights survive type verification
-    qd = spark.createDataFrame(
+    qd = local_relation(
+        spark,
         [(r.query_id, r.term_id, float(r.weight), float(r.idf)) for r in qd_rows],
         f"query_id {qid_type}, term_id long, weight double, idf double",
     )
@@ -187,7 +220,7 @@ def _mask_tombstones(spark: SparkSession, index_dir: str, decoded: DataFrame) ->
     if not dead:
         return decoded
     dead_df = F.broadcast(
-        spark.createDataFrame([(int(x),) for x in sorted(dead)], "doc_id long")
+        local_relation(spark, [(int(x),) for x in sorted(dead)], "doc_id long")
     )
     return decoded.join(dead_df, "doc_id", "left_anti")
 
@@ -658,7 +691,7 @@ def bm25_topk_indexed(
         # no query term matched the dictionary (OOV batch, or a shard whose
         # local vocabulary lacks every term): same empty result as the
         # per-query grouping — never repartition(0), which raises
-        return spark.createDataFrame([], schema)
+        return local_relation(spark, [], schema)
     if query_buckets is None:
         # bucket count sized by the QUERY BATCH, never by parallelism: the
         # shuffled volume is Σ_buckets |blocks(bucket's terms)| — hot Zipf
@@ -681,10 +714,7 @@ def bm25_topk_indexed(
         )
         bucket_queries.setdefault(bkt, []).append((int(qid), arrs))
         tb_pairs.update((t, bkt) for t in spec)
-    tb = spark.createDataFrame(
-        [(int(t), int(bkt)) for t, bkt in sorted(tb_pairs)],
-        "term_id long, bucket int",
-    )
+    tb = local_relation(spark, sorted(tb_pairs), "term_id long, bucket int")
     bq_bc = spark.sparkContext.broadcast(bucket_queries)
     blocks = postings.join(F.broadcast(tb), "term_id")
     return (

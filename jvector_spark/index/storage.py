@@ -33,12 +33,25 @@ jvector-base/.../graph/disk/OnDiskGraphIndex.java:72, CommonHeader.java:59-152):
 bucket of (term_id, salt)) so query-time term lookups prune directories —
 the analog of jvector only seeking the adjacency regions the search
 touches.
+
+Query planning reads the metadata tables on the driver through pyarrow:
+:func:`read_segments`, :func:`tombstone_ids` and :func:`dictionary_lookup`
+(a ``term``-filtered read of only the queried terms) launch no Spark job,
+and :func:`read_postings` opens the postings scan with the declared
+:data:`POSTINGS_TABLE_SCHEMA`, so Spark runs no schema-inference job
+either: the one planning job left is the collect of the caller's query
+relation. Nothing is cached across calls: every call reads the tables as
+they are on disk, so no write (extend, delete, compact, parameter
+refresh) leaves a reader stale.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +62,16 @@ from pyspark.sql import functions as F
 FORMAT_VERSION = 2
 
 TABLES = ("segments", "dictionary", "postings", "doc_stats", "doc_map", "build_lineage")
+
+# columns of a postings data file (the encoders' output schema)
+POSTINGS_SCHEMA = (
+    "term_id long, salt int, block_id int, n int, base long, max_doc_id long, "
+    "max_tf long, min_dl long, doc_ids_packed binary, "
+    "tfs_packed binary, dls_packed binary"
+)
+# the postings table as Spark reads it back: the hive partition column
+# comes last, the order partition discovery gives it
+POSTINGS_TABLE_SCHEMA = POSTINGS_SCHEMA + ", part_id int"
 
 
 def table_path(index_dir: str, name: str) -> str:
@@ -112,25 +135,37 @@ def _ddl_names(schema: str) -> list[str]:
     return names
 
 
-def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """One-partition DataFrame from driver-local rows, converted via Arrow.
+def local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """DataFrame from driver-local rows, converted via Arrow.
 
     ``createDataFrame(list)`` splits local data into ``defaultParallelism``
-    pickled slices, and a ``coalesce(1)`` over that local-relation parent
-    re-serializes the whole relation through a Python-worker task
-    (measured ~4 s per job at local[32], even for 64 rows). The pandas/
-    Arrow conversion happens driver-side with no Python worker at all, and
-    ``repartition(1)`` gives writers their single output file for well
-    under a second."""
+    pickled slices behind an RDD, so every use of it (a broadcast, a
+    ``coalesce(1)``) is a Spark job through a Python-worker task (measured
+    ~0.5 s warm for 2 rows, ~4 s per job at local[32] for 64 rows). The
+    pandas/Arrow conversion happens driver-side and yields a local
+    relation: building or broadcasting it launches no job at all. Raises
+    ``ValueError`` when a row's arity differs from the schema's."""
     import pandas as pd
 
     names = _ddl_names(schema)
+    bad = next((r for r in rows if len(r) != len(names)), None)
+    if bad is not None:
+        raise ValueError(
+            f"row {bad!r} has {len(bad)} values; schema {schema!r} has "
+            f"{len(names)} columns"
+        )
     pdf = (
         pd.DataFrame(dict(zip(names, map(list, zip(*rows)))))
         if rows
         else pd.DataFrame({n: [] for n in names})
     )
-    return spark.createDataFrame(pdf, schema).repartition(1)
+    return spark.createDataFrame(pdf, schema)
+
+
+def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """One-partition :func:`local_relation`, for writers: ``repartition(1)``
+    gives them their single output file for well under a second."""
+    return local_relation(spark, rows, schema).repartition(1)
 
 
 # Spark's XxHash64 primes (sql/catalyst XXH64) — used to resolve
@@ -203,9 +238,38 @@ def read_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(index_dir, name))
 
 
+def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The postings table, read with its declared schema: Spark skips the
+    footer-reading schema-inference job it would otherwise run, and still
+    discovers the ``part_id`` directories, so a ``part_id`` filter prunes
+    them in the plan."""
+    return spark.read.schema(POSTINGS_TABLE_SCHEMA).parquet(
+        table_path(index_dir, "postings")
+    )
+
+
+def _arrow_table(index_dir: str, name: str, **scan) -> pa.Table | None:
+    """A table read on the driver through pyarrow, or None when its
+    directory is absent or holds no data file. Discovery skips names
+    starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` checksums,
+    ``_temporary``), as Spark's reader does. ``scan`` goes to
+    ``Dataset.to_table`` (``columns``, ``filter``)."""
+    path = table_path(index_dir, name)
+    if not os.path.isdir(path):
+        return None
+    dset = ds.dataset(path, format="parquet")
+    if not dset.files:
+        return None
+    return dset.to_table(**scan)
+
+
 def read_segments(spark: SparkSession, index_dir: str) -> dict:
-    """The single segments row as a plain dict (header metadata)."""
-    return read_table(spark, index_dir, "segments").collect()[0].asDict()
+    """The single segments row as a plain dict (header metadata), read on
+    the driver — no Spark job."""
+    tbl = _arrow_table(index_dir, "segments")
+    if tbl is None or tbl.num_rows == 0:
+        raise FileNotFoundError(f"no segments row under {index_dir}")
+    return tbl.slice(0, 1).to_pylist()[0]
 
 
 def update_segments(spark: SparkSession, index_dir: str, **updates) -> dict:
@@ -233,11 +297,30 @@ def tombstone_ids(spark: SparkSession, index_dir: str) -> set[int] | None:
     same way the reference keeps deletions as an in-memory bitset
     (OnHeapGraphIndex deletedNodes; marked via GraphIndexBuilder.java:681-683).
     A set too large to broadcast is the signal to compact."""
-    path = table_path(index_dir, "tombstones")
-    if not os.path.exists(path):
+    tbl = _arrow_table(index_dir, "tombstones", columns=["doc_id"])
+    if tbl is None:
         return None
-    got = {r.doc_id for r in spark.read.parquet(path).distinct().collect()}
-    return got or None
+    return set(pc.unique(tbl.column("doc_id")).to_pylist()) or None
+
+
+def dictionary_lookup(index_dir: str, terms) -> dict[str, list[tuple[int, int, int]]]:
+    """term → [(term_id, df, n_salts)] for ``terms`` only: a driver-side
+    read of four dictionary columns with ``term IN terms`` pushed into the
+    scan, so Parquet row-group statistics skip groups holding none of the
+    terms. Never a full collect of the vocabulary (docs/SCALE.md gives its
+    limit at ~10^9 terms)."""
+    terms = sorted({t for t in terms if t is not None})
+    if not terms:
+        return {}
+    tbl = _arrow_table(
+        index_dir, "dictionary",
+        columns=["term", "term_id", "df", "n_salts"],
+        filter=pc.field("term").isin(terms),
+    )
+    out: dict[str, list[tuple[int, int, int]]] = {}
+    for r in tbl.to_pylist() if tbl is not None else ():
+        out.setdefault(r["term"], []).append((r["term_id"], r["df"], r["n_salts"]))
+    return out
 
 
 def block_meta(spark: SparkSession, index_dir: str) -> DataFrame:
