@@ -81,14 +81,12 @@ def _index_for(spark: SparkSession, sf_dir: str) -> str:
     from jvector_spark.index.build import build_index
 
     d = tempfile.mkdtemp(prefix="jvidx_entry_")
-    # single-shot fast path with the df-exact salt plan: no staging
-    # round-trip, no per-part jobs, and a block layout byte-identical to
-    # the checkpointed build (postings_build's block_meta is a contract
-    # row). The checkpointed/resumable path keeps its own test coverage.
+    # single-shot: no staging round-trip and no per-part jobs. The
+    # checkpointed/resumable path keeps its own test coverage.
     build_index(
         _docs(spark, sf_dir), d, doc_map_cols=["source"],
         salt_threshold=256, target_salt_postings=256, n_parts=4,
-        checkpointed=False, exact_df_salts=True,
+        checkpointed=False,
     )
     _INDEX_CACHE[sf_dir] = d
     return d

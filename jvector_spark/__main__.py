@@ -179,7 +179,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     b.add_argument(
         "--fast", action="store_true",
-        help="single-shot build (no per-part checkpoints)",
+        help="one encode job over every part: same index, no per-part "
+        "checkpoints, so no --resume",
     )
     b.set_defaults(fn=cmd_build)
 

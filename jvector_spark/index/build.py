@@ -1,67 +1,96 @@
 """Inverted-index build pipeline (SURVEY.md §3.1 Spark translation).
 
-Stages (reference analog: GraphIndexBuilder.build → cleanup → write,
-jvector-base/.../graph/GraphIndexBuilder.java:439-511):
+Every build runs the same stages (reference analog: GraphIndexBuilder.build
+→ cleanup → write, jvector-base/.../graph/GraphIndexBuilder.java:439-511):
+the single-shot ``build_index(checkpointed=False)``, the fused
+``build_index_transcripts`` (and so every shard of ``index.sharded``), the
+checkpointed ``build_index`` and the doc-partitioned
+``index.docpart.build_doc_partitioned``.
 
-  1. **Stage the enriched term-frequency relation** — tokenize (JVM-side),
-     tf/df/dl stats, salt assignment for hot terms — and write it to a
-     staging directory hive-partitioned by ``part_id`` (deterministic hash
-     bucket of (term_id, salt)). One shuffle.
-  2. **Per-part encode** — for each part not yet marked complete in
-     ``build_lineage``: read only that directory partition, sort within
-     partitions by (term_id, salt, doc_id), and run a fully vectorized
-     mapInPandas encoder that emits fused posting blocks (delta+varint
-     docID gaps, varint tfs + dls inline, (max_tf, min_dl) block-max
-     metadata — score bounds derive from these at query time). Each part
-     commit appends a lineage row — the checkpoint unit (analog of
-     OnHeapGraphIndex save/load + CheckpointManager.java:33-112, B11/B12).
-     A killed build resumes by skipping completed parts; the final index is
-     logically identical to a single-shot build (tested).
+  1. **Tokenize once** into a narrow cached projection (doc_id, token
+     array [, doc_map columns]); raw text is never cached. Each consumer
+     below re-derives what it needs from the cached arrays.
+  2. **doc_stats** is ``size(tokens)``, written with n_docs, avgdl and the
+     doc_id/dl extremes observed on the same pass; doc_map is written
+     concurrently.
+  3. **Vocabulary and salt plan**: one map-combined ``groupBy(term)``
+     carrying cf, dense lexicographic term_ids, and ``n_salts`` per term.
+  4. **Pack plan** (:class:`PackPlan`): the exchange row is one int64, two
+     int64s or the 4-column fallback, chosen from the observed widths.
+  5. **The exchange**: the one corpus-sized shuffle, sorted JVM-side into
+     a presorted Arrow encoder that aggregates tf and emits fused posting
+     blocks (delta+varint docID gaps, varint tfs + dls inline, (max_tf,
+     min_dl) block-max metadata — score bounds derive from these at query
+     time).
+  6. **part_id** is derived over the encoded blocks, and the dictionary's
+     df is summed from the blocks' meta columns.
 
-Skew (SURVEY.md P11): a term with df > ``salt_threshold`` is split into
+The checkpointed build runs stages 1-4 once and stages the packed exchange
+row hive-partitioned by ``part_id``, with the pack plan beside it. Each
+part is then one encode job and one ``build_lineage`` row — the checkpoint
+unit (analog of OnHeapGraphIndex save/load + CheckpointManager.java:33-112,
+B11/B12). A killed build resumes by skipping committed parts, and the
+finished index equals the single-shot build row for row (tested).
+
+Skew (SURVEY.md P11): a term with cf > ``salt_threshold`` is split into
 ``n_salts`` doc-range sub-lists — salt = doc_id * n_salts // n_docs — so a
-hot term's postings land in multiple shuffle groups. Doc-range (not hash)
-salting keeps every (term, salt) run sorted and doc-disjoint, which the
-WAND query path exploits for block skipping.
+hot term's postings land in multiple shuffle groups. cf ≥ df, so a term
+splits at least as much as its document count asks; over-salting is
+harmless (blocks stay doc-range-disjoint), under-salting would not be.
+Doc-range (not hash) salting keeps every (term, salt) run sorted and
+doc-disjoint, which the WAND query path exploits for block skipping.
 
 Scale notes: per-posting dl is stored inline in each block (varint, ~1
 byte) so query-time exact scoring never joins the corpus-sized doc_stats
-table — the fused-feature trick (FusedPQ.java:75-122). The only
-corpus-sized shuffles in the whole build are the tf groupBy and the
-repartition-by-(term_id, salt).
+table — the fused-feature trick (FusedPQ.java:75-122). tf is aggregated on
+the reduce side of the exchange, so the exchange is the only corpus-sized
+shuffle in the whole build.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import threading
 import time
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import BLOCK_SIZE, BM25_B, BM25_K1
-from ..functions.analysis import TOKEN_PATTERN
+from ..functions.analysis import TOKEN_PATTERN, tokens_col
 from ..operators.doc_ids import assign_dense_ids
-from ..operators.text_stats import dictionary as build_dictionary
-from ..operators.text_stats import doc_stats, term_freq
-from .codec import varint_encode
 from .storage import (
     FORMAT_VERSION,
     POSTINGS_SCHEMA,
+    read_segments,
     read_table,
-    shuffle_n,
     sized_shuffle_n,
     table_path,
     write_table,
 )
 
+# Arrow batch rows for the encode exchange: its rows are at most ~40 B
+# wide, so 128k-row batches are ~5 MB — far fewer IPC round-trips and
+# allocator churn per partition than the session default
+ENCODE_ARROW_BATCH = 131_072
 # serializes the session-global Arrow batch-size override around the encode
-# write (see build_index_transcripts) across threads sharing a SparkSession
+# write (see _write_blocks) across threads sharing a SparkSession
 _ARROW_BATCH_LOCK = threading.Lock()
+
+LINEAGE_SCHEMA = (
+    "part_id int, docs_indexed long, postings_emitted long, "
+    "bytes_compressed long, status string"
+)
+SEGMENTS_SCHEMA = (
+    "format_version int, n_docs long, avgdl double, k1 double, b double, "
+    "block_size int, token_pattern string, n_parts int"
+)
 
 
 def _bg_job(fn) -> "tuple[threading.Thread, list]":
@@ -143,7 +172,6 @@ def _varint_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
 
 def encode_partition_pdf(
     pdf: pd.DataFrame, block_size: int = BLOCK_SIZE, carry_part_id: bool = False,
-    presorted: bool = False,
 ) -> pd.DataFrame:
     """Vectorized block encoder for one (already filtered) partition of the
     enriched tf relation. Expects columns term_id, salt, doc_id, tf, dl
@@ -159,8 +187,7 @@ def encode_partition_pdf(
     """
     if len(pdf) == 0:
         return _empty_postings_pdf(carry_part_id)
-    if not presorted:
-        pdf = pdf.sort_values(["term_id", "salt", "doc_id"], kind="mergesort")
+    pdf = pdf.sort_values(["term_id", "salt", "doc_id"], kind="mergesort")
     term = pdf["term_id"].to_numpy(np.int64)
     salt = pdf["salt"].to_numpy(np.int32)
     d = pdf["doc_id"].to_numpy(np.int64)
@@ -262,233 +289,176 @@ def _empty_postings_pdf(carry_part_id: bool = False) -> pd.DataFrame:
 
 
 def _aggregate_occ_arrays(
-    term: np.ndarray,
-    salt: np.ndarray,
-    doc: np.ndarray,
-    dl: np.ndarray,
-    part: np.ndarray | None,
-) -> tuple:
-    """Run-length tf aggregation over (term, salt, doc)-sorted arrays.
-    All-unique input (tf ≡ 1 — the dominant case for short turns) skips
-    the six full-size gathers entirely. ``part`` is optional: the
-    narrowed-exchange build paths derive part_id JVM-side after encoding
-    instead of shipping it per occurrence."""
-    n = len(term)
+    keys: list[np.ndarray],
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """Run-length tf aggregation over exchange-row columns sorted by all of
+    them: a run of equal rows is one (term, salt, doc) occurrence group.
+    Returns the run heads and their tfs. All-unique input (tf ≡ 1 — the
+    dominant case for short turns) skips the gathers entirely."""
+    n = len(keys[0])
     start = np.ones(n, dtype=bool)
-    start[1:] = (
-        (term[1:] != term[:-1]) | (salt[1:] != salt[:-1]) | (doc[1:] != doc[:-1])
-    )
+    start[1:] = keys[0][1:] != keys[0][:-1]
+    for a in keys[1:]:
+        start[1:] |= a[1:] != a[:-1]
     starts = np.flatnonzero(start)
     if starts.size == n:
-        return term, salt, doc, np.ones(n, dtype=np.int64), dl, part
-    counts = np.diff(np.append(starts, n)).astype(np.int64)
-    return (
-        term[starts], salt[starts], doc[starts], counts, dl[starts],
-        part[starts] if part is not None else None,
-    )
+        return keys, np.ones(n, dtype=np.int64)
+    return [a[starts] for a in keys], np.diff(np.append(starts, n)).astype(np.int64)
 
 
-def _encode_occ_map_fn(
-    block_size: int, presorted: bool = False, carry_part_id: bool = True,
-    packed_bits: tuple[int, int] | None = None,
-    packed1_bits: tuple[int, int, int] | None = None,
-):
-    """mapInPandas fn: occurrence rows → in-worker tf aggregation → fused
-    posting blocks (single-shuffle build path). The build shuffles RAW
-    occurrences once instead of paying a separate tf-groupBy exchange: the
-    aggregation happens on the reduce side of the one shuffle, where the
-    data already sits.
+class PackPlan(NamedTuple):
+    """The exchange row's encoding, chosen per build from observed widths.
 
-    ``presorted`` = rows already ordered by (term_id, salt, doc_id) — the
-    single-shot build sorts on the JVM side of the exchange (Tungsten
-    radix sort, off-heap and cache-efficient), so the worker skips the
-    lexsort: random-access-heavy python sorting was the build's main
-    memory-bandwidth hog and the first thing to stop scaling when
+    UnsafeRow stores every fixed-width field in an 8-byte slot, so only
+    dropping slots shrinks the bytes the corpus-sized shuffle writes, reads
+    and sorts:
+
+    - ``cols=1``: ``tsdd = (term_id << salt_bits | salt) << (doc_bits +
+      dl_bits) | doc_id << dl_bits | dl`` — one slot and a single-long
+      Tungsten sort key;
+    - ``cols=2``: ``ts = term_id << salt_bits | salt`` and ``dd = doc_id <<
+      dl_bits | dl`` — two slots, for id spaces too wide for one (a shard
+      at a large id offset);
+    - ``cols=4``: the plain (term_id, salt, doc_id, dl) row, when a pack
+      could overflow 63 bits (negative ids, absurd vocabularies).
+
+    Every field has a fixed width, so the packs preserve order: sorting the
+    exchange columns IS sorting (term_id, salt, doc_id, dl)."""
+
+    cols: int
+    salt_bits: int
+    doc_bits: int
+    dl_bits: int
+
+    @classmethod
+    def choose(
+        cls, n_terms: int, max_salt: int, min_doc: int, max_doc: int, max_dl: int
+    ) -> "PackPlan":
+        salt_bits = max(1, max(max_salt, 1).bit_length())
+        doc_bits = max(1, max(max_doc, 1).bit_length())
+        dl_bits = max(1, max(max_dl, 1).bit_length())
+        max_ts = (n_terms << salt_bits) - 1
+        if (
+            min_doc < 0
+            or max_ts >= 1 << 63
+            or (max_doc << dl_bits) + max_dl >= 1 << 63
+        ):
+            cols = 4
+        elif ((max_ts + 1) << (doc_bits + dl_bits)) - 1 < 1 << 63:
+            cols = 1
+        else:
+            cols = 2
+        return cls(cols, salt_bits, doc_bits, dl_bits)
+
+    @property
+    def names(self) -> list[str]:
+        return {1: ["tsdd"], 2: ["ts", "dd"], 4: ["term_id", "salt", "doc_id", "dl"]}[
+            self.cols
+        ]
+
+    def pack(self) -> list[Column]:
+        """The exchange columns, from (term_id, salt, doc_id, dl) rows."""
+        if self.cols == 4:
+            return [F.col(c) for c in self.names]
+        ts = F.shiftleft("term_id", self.salt_bits) + F.col("salt").cast("long")
+        dd = F.shiftleft("doc_id", self.dl_bits) + F.col("dl")
+        if self.cols == 2:
+            return [ts.alias("ts"), dd.alias("dd")]
+        return [(F.shiftleft(ts, self.doc_bits + self.dl_bits) + dd).alias("tsdd")]
+
+    def route(self, by_salt: bool) -> list[Column]:
+        """Exchange partitioning keys over the packed row: (term_id, salt),
+        injective, so a hot term's salts still spread across partitions —
+        or the salt alone, when the salt is a doc-range bucket."""
+        if self.cols == 4:
+            return [F.col("salt")] if by_salt else [F.col("term_id"), F.col("salt")]
+        ts = (
+            F.col("ts")
+            if self.cols == 2
+            else F.shiftright("tsdd", self.doc_bits + self.dl_bits)
+        )
+        return [ts.bitwiseAND(F.lit((1 << self.salt_bits) - 1))] if by_salt else [ts]
+
+    def doc_id(self) -> Column:
+        """doc_id, unpacked from the exchange row."""
+        if self.cols == 4:
+            return F.col("doc_id")
+        dd = (
+            F.col("dd")
+            if self.cols == 2
+            else F.col("tsdd").bitwiseAND(F.lit((1 << (self.doc_bits + self.dl_bits)) - 1))
+        )
+        return F.shiftright(dd, self.dl_bits)
+
+    def unpack(self, keys: list[np.ndarray]) -> tuple[np.ndarray, ...]:
+        """(term_id, salt, doc_id, dl) arrays from exchange-column arrays."""
+        if self.cols == 4:
+            term, salt, doc, dl = keys
+            return term, salt.astype(np.int32), doc, dl
+        if self.cols == 1:
+            dd_bits = self.doc_bits + self.dl_bits
+            keys = [keys[0] >> dd_bits, keys[0] & ((1 << dd_bits) - 1)]
+        ts, dd = keys
+        return (
+            ts >> self.salt_bits,
+            (ts & ((1 << self.salt_bits) - 1)).astype(np.int32),
+            dd >> self.dl_bits,
+            dd & ((1 << self.dl_bits) - 1),
+        )
+
+
+def _encode_occ_map_fn(block_size: int, plan: PackPlan):
+    """mapInPandas fn: exchange rows → in-worker tf aggregation → fused
+    posting blocks. The build shuffles RAW occurrences once instead of
+    paying a separate tf-groupBy exchange: the aggregation happens on the
+    reduce side of the one shuffle, where the data already sits.
+
+    Rows arrive sorted by every exchange column: the exchange sorts on the
+    JVM side (Tungsten radix sort, off-heap and cache-efficient), so the
+    worker never sorts — random-access-heavy python sorting was the build's
+    main memory-bandwidth hog and the first thing to stop scaling when
     multiple workers share a socket. Arrow batch boundaries never break
-    ordering because the whole partition is concatenated first.
-
-    The presorted path stays in numpy end-to-end (to_numpy views of the
-    Arrow columns → run-length → block encode → one output DataFrame) —
-    no intermediate pandas frame, no consolidation copies.
-
-    ``carry_part_id=False`` drops part_id from the shuffled occurrence
-    row entirely: it is a pure function of (term_id, salt), so shipping
-    it per occurrence pays ~17 % more exchange bytes (an 8-byte UnsafeRow
-    slot holding a high-entropy hash the shuffle codec cannot compress)
-    for a value the caller can recompute JVM-side over the ~1000×-smaller
-    block relation after encoding.
-
-    ``packed_bits=(salt_bits, dl_bits)`` switches the input contract to
-    the PACKED two-column exchange row: ``ts = term_id << salt_bits |
-    salt`` and ``dd = doc_id << dl_bits | dl`` (shift widths chosen by the
-    caller from driver-known maxima so nothing truncates). Two int64 slots
-    instead of four halves the UnsafeRow payload the corpus-sized shuffle
-    writes, reads, and sorts, and the Tungsten sort compares (ts, dd)
-    pairs whose first key is a single long — lexicographically identical
-    to (term_id, salt, doc_id) because the packs are order-preserving.
-    tf run-length aggregation happens on the packed columns (two
-    comparisons per row instead of three) and only the surviving rows are
-    unpacked. Requires ``presorted`` and ``carry_part_id=False``.
-
-    ``packed1_bits=(salt_bits, doc_bits, dl_bits)`` is the ONE-column
-    variant: ``tsdd = ((term_id << salt_bits | salt) << (doc_bits +
-    dl_bits)) | (doc_id << dl_bits | dl)`` — a single int64 UnsafeRow
-    slot (16 B/row incl. the null bitset vs 24 B for two slots), a
-    single-long Tungsten sort key, and a one-array run-length pass in the
-    worker. Numerically ordering tsdd IS ordering (term_id, salt, doc_id,
-    dl) because every field has a fixed driver-chosen width. Feasible
-    whenever the combined widths fit 63 bits (the caller checks)."""
-    if packed_bits is not None or packed1_bits is not None:
-        assert presorted and not carry_part_id, "packed path is presorted-only"
-        assert packed_bits is None or packed1_bits is None
-
-    def fn_packed1(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        salt_bits, doc_bits, dl_bits = packed1_bits
-        acc: list[np.ndarray] = []
-        for p in it:
-            if len(p):
-                acc.append(p["tsdd"].to_numpy(np.int64))
-        if not acc:
-            yield _empty_postings_pdf(carry_part_id=False)
-            return
-        tsdd = acc[0] if len(acc) == 1 else np.concatenate(acc)
-        if os.environ.get("JV_DEBUG"):
-            if not bool((tsdd[1:] >= tsdd[:-1]).all()):
-                i = int(np.flatnonzero(tsdd[1:] < tsdd[:-1])[0])
-                raise AssertionError(
-                    "packed1 presorted encode input violates tsdd order "
-                    f"at row {i + 1}: {tsdd[i]} -> {tsdd[i+1]}"
-                    " — upstream sortWithinPartitions keys drifted"
-                )
-        n = len(tsdd)
-        start = np.ones(n, dtype=bool)
-        start[1:] = tsdd[1:] != tsdd[:-1]
-        starts = np.flatnonzero(start)
-        if starts.size == n:
-            tfo = np.ones(n, dtype=np.int64)
-        else:
-            tfo = np.diff(np.append(starts, n)).astype(np.int64)
-            tsdd = tsdd[starts]
-        dd_width = doc_bits + dl_bits
-        ts = tsdd >> dd_width
-        tid = ts >> salt_bits
-        sid = (ts & ((1 << salt_bits) - 1)).astype(np.int32)
-        dd = tsdd & ((1 << dd_width) - 1)
-        did = dd >> dl_bits
-        dlo = dd & ((1 << dl_bits) - 1)
-        out = _encode_sorted_arrays(tid, sid, did, tfo, dlo, None, block_size)
-        res = pd.DataFrame(out)
-        res["salt"] = res["salt"].astype("int32")
-        yield res
-
-    if packed1_bits is not None:
-        return fn_packed1
-
-    def fn_packed(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        salt_bits, dl_bits = packed_bits
-        ts_acc: list[np.ndarray] = []
-        dd_acc: list[np.ndarray] = []
-        for p in it:
-            if len(p):
-                ts_acc.append(p["ts"].to_numpy(np.int64))
-                dd_acc.append(p["dd"].to_numpy(np.int64))
-        if not ts_acc:
-            yield _empty_postings_pdf(carry_part_id=False)
-            return
-        ts = ts_acc[0] if len(ts_acc) == 1 else np.concatenate(ts_acc)
-        dd = dd_acc[0] if len(dd_acc) == 1 else np.concatenate(dd_acc)
-        if os.environ.get("JV_DEBUG"):
-            ok = (ts[1:] > ts[:-1]) | ((ts[1:] == ts[:-1]) & (dd[1:] >= dd[:-1]))
-            if not bool(ok.all()):
-                i = int(np.flatnonzero(~ok)[0])
-                raise AssertionError(
-                    "packed presorted encode input violates (ts, dd) order "
-                    f"at row {i + 1}: {(ts[i], dd[i])} -> {(ts[i+1], dd[i+1])}"
-                    " — upstream sortWithinPartitions keys drifted"
-                )
-        n = len(ts)
-        start = np.ones(n, dtype=bool)
-        start[1:] = (ts[1:] != ts[:-1]) | (dd[1:] != dd[:-1])
-        starts = np.flatnonzero(start)
-        if starts.size == n:
-            tfo = np.ones(n, dtype=np.int64)
-        else:
-            tfo = np.diff(np.append(starts, n)).astype(np.int64)
-            ts, dd = ts[starts], dd[starts]
-        tid = ts >> salt_bits
-        sid = (ts & ((1 << salt_bits) - 1)).astype(np.int32)
-        did = dd >> dl_bits
-        dlo = dd & ((1 << dl_bits) - 1)
-        out = _encode_sorted_arrays(tid, sid, did, tfo, dlo, None, block_size)
-        res = pd.DataFrame(out)
-        res["salt"] = res["salt"].astype("int32")
-        yield res
-
-    if packed_bits is not None:
-        return fn_packed
+    ordering because the whole partition is concatenated first (per-column
+    ``np.concatenate``, not ``pd.concat``, whose consolidation would copy
+    every column into one 2D block). The path stays in numpy end to end:
+    run-length tf on the packed columns, then only the surviving rows are
+    unpacked with shifts and masks."""
+    names = plan.names
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-column np.concatenate over the Arrow batches, NOT pd.concat:
-        # pandas consolidation would copy all 5 columns into one 2D block
-        # (strided writes — pure memory-bandwidth burn in every worker)
-        cols: dict[str, list[np.ndarray]] = {
-            "term_id": [], "salt": [], "doc_id": [], "dl": []
-        }
-        dts = {
-            "part_id": np.int32, "term_id": np.int64, "salt": np.int32,
-            "doc_id": np.int64, "dl": np.int64,
-        }
-        if carry_part_id:
-            cols = {"part_id": [], **cols}
-        n_rows = 0
+        acc: dict[str, list[np.ndarray]] = {c: [] for c in names}
         for p in it:
-            if len(p) == 0:
-                continue
-            n_rows += len(p)
-            for c, acc in cols.items():
-                acc.append(p[c].to_numpy(dts[c]))
-        if n_rows == 0:
-            yield _empty_postings_pdf(carry_part_id=carry_part_id)
+            if len(p):
+                for c in names:
+                    acc[c].append(p[c].to_numpy(np.int64))
+        if not acc[names[0]]:
+            yield _empty_postings_pdf()
             return
-        arr = {
-            c: (acc[0] if len(acc) == 1 else np.concatenate(acc))
-            for c, acc in cols.items()
-        }
-        if not presorted:
-            order = np.lexsort((arr["doc_id"], arr["salt"], arr["term_id"]))
-            arr = {c: a[order] for c, a in arr.items()}
-        elif os.environ.get("JV_DEBUG"):
-            # presorted=True TRUSTS that the upstream sortWithinPartitions
-            # keys match this worker's (term_id, salt, doc_id) grouping; if
-            # a later edit drifts the sort contract, negative doc gaps wrap
-            # to huge uint64 varints and the build emits corrupted blocks
+        keys = [a[0] if len(a) == 1 else np.concatenate(a) for a in acc.values()]
+        if os.environ.get("JV_DEBUG"):
+            # the encoder TRUSTS the upstream sortWithinPartitions keys; if a
+            # later edit drifts the sort contract, negative doc gaps wrap to
+            # huge uint64 varints and the build emits corrupted blocks
             # SILENTLY. This debug-gated check makes that drift fail loudly
             # (run the suite once with JV_DEBUG=1 after touching the sort).
-            t_, s_, d_ = arr["term_id"], arr["salt"], arr["doc_id"]
-            tie_t = t_[1:] == t_[:-1]
-            tie_ts = tie_t & (s_[1:] == s_[:-1])
-            ok = (
-                (t_[1:] > t_[:-1])
-                | (tie_t & (s_[1:] > s_[:-1]))
-                | (tie_ts & (d_[1:] >= d_[:-1]))
-            )
+            tie = np.ones(len(keys[0]) - 1, dtype=bool)
+            ok = np.zeros_like(tie)
+            for a in keys:
+                ok |= tie & (a[1:] > a[:-1])
+                tie &= a[1:] == a[:-1]
+            ok |= tie
             if not bool(ok.all()):
                 i = int(np.flatnonzero(~ok)[0])
                 raise AssertionError(
-                    "presorted encode input violates (term_id, salt, "
-                    f"doc_id) order at row {i + 1}: "
-                    f"{(t_[i], s_[i], d_[i])} -> {(t_[i+1], s_[i+1], d_[i+1])}"
+                    f"presorted encode input violates {tuple(names)} order "
+                    f"at row {i + 1}: {tuple(int(a[i]) for a in keys)} -> "
+                    f"{tuple(int(a[i + 1]) for a in keys)}"
                     " — upstream sortWithinPartitions keys drifted"
                 )
-        tid, sid, did, tfo, dlo, pid = _aggregate_occ_arrays(
-            arr["term_id"], arr["salt"], arr["doc_id"], arr["dl"],
-            arr["part_id"] if carry_part_id else None,
-        )
-        out = _encode_sorted_arrays(tid, sid, did, tfo, dlo, pid, block_size)
-        res = pd.DataFrame(out)
+        keys, tf = _aggregate_occ_arrays(keys)
+        term, salt, doc, dl = plan.unpack(keys)
+        res = pd.DataFrame(_encode_sorted_arrays(term, salt, doc, tf, dl, None, block_size))
         res["salt"] = res["salt"].astype("int32")
-        if carry_part_id:
-            res["part_id"] = res["part_id"].astype("int32")
         yield res
 
     return fn
@@ -525,182 +495,123 @@ def build_index(
     n_parts: int = 8,
     resume: bool = False,
     fail_after_parts: int | None = None,
-    keep_staging: bool = False,
     checkpointed: bool = True,
-    exact_df_salts: bool = False,
 ) -> dict:
-    """Build (or resume) the full index at ``index_dir``. Returns build
-    metrics. ``fail_after_parts`` injects a crash after that many part
-    commits (for resume tests — the analog of the reference's checkpoint
-    kill/restart tests).
+    """Build (or resume) the full index at ``index_dir``; returns build
+    metrics. Both modes run the same pipeline (module docstring) and write
+    the same rows.
 
-    ``checkpointed=False`` is the single-shot fast path: no staging
-    materialization, one encode+write job covering every part (still hive-
-    partitioned by part_id, so the on-disk layout and every query path are
-    identical). Use it when the job-level retry (rerun the whole build) is
-    an acceptable failure-domain — e.g. moderate corpora or benchmarking;
-    the checkpointed path costs one extra corpus-sized write+read plus a
-    fixed ~1s of driver scheduling per part, which buys partition-level
-    restart (B11/B12).
+    ``checkpointed=True`` stages the packed exchange rows once, then runs
+    one encode job and commits one ``build_lineage`` row per part — the
+    price of partition-level restart (B11/B12) is one extra corpus-sized
+    write+read plus a fixed ~1 s of driver scheduling per part.
+    ``resume=True`` skips the parts already committed;
+    ``fail_after_parts`` injects a crash after that many part commits (for
+    resume tests — the analog of the reference's checkpoint kill/restart
+    tests).
 
-    ``exact_df_salts`` (single-shot only) derives the hot-term salt plan
-    from df (distinct docs per term) exactly as the checkpointed path
-    does, instead of the default cf (total occurrences ≥ df): the block
-    layout then matches the checkpointed build byte-for-byte. It costs a
-    countDistinct expansion in the vocabulary aggregate, so it is opt-in
-    — the fused transcripts build keeps the cheaper cf plan."""
+    ``checkpointed=False`` runs one encode job over every part with no
+    staging round-trip. Use it when rerunning the whole build is an
+    acceptable failure domain — e.g. moderate corpora or benchmarking."""
     if not checkpointed:
-        return _build_index_single_shot(
-            corpus, index_dir, text_col, id_col, doc_map_cols, k1, b,
-            block_size, salt_threshold, target_salt_postings, n_parts,
-            exact_df_salts=exact_df_salts,
-        )
+        toks = _tokenize(corpus, text_col, id_col, doc_map_cols)
+        try:
+            return _build_index_single_shot(
+                toks, index_dir, id_col, doc_map_cols, k1, b, block_size,
+                salt_threshold, target_salt_postings, n_parts, cached=False,
+            )
+        finally:
+            toks.unpersist()
+
     spark = corpus.sparkSession
-    staging_dir = os.path.join(index_dir, "_staging_tf")
+    staging = os.path.join(index_dir, "_staging")
+    occ_dir = os.path.join(staging, "occ")
+    plan_path = os.path.join(staging, "pack_plan.json")
     lineage_path = table_path(index_dir, "build_lineage")
-
-    stage1_done = resume and os.path.exists(
-        os.path.join(index_dir, "segments", "_SUCCESS")
-    )
-    if not stage1_done:
-        corpus = corpus.persist()
-        tf = term_freq(corpus, text_col, id_col)
-        dstats = doc_stats(corpus, text_col, id_col)
-        n_docs, avgdl = dstats.agg(
-            F.count("*"), F.avg("dl")
-        ).collect()[0]
-        n_docs, avgdl = int(n_docs), float(avgdl)
-
-        dct = build_dictionary(tf, id_col=id_col).withColumn(
-            "n_salts",
-            F.when(
-                F.col("df") > salt_threshold,
-                F.ceil(F.col("df") / F.lit(target_salt_postings)).cast("int"),
-            ).otherwise(F.lit(1)),
+    postings_path = table_path(index_dir, "postings")
+    if not (resume and os.path.exists(os.path.join(index_dir, "segments", "_SUCCESS"))):
+        # a fresh stage: parts and lineage rows of an earlier build are stale
+        shutil.rmtree(postings_path, ignore_errors=True)
+        shutil.rmtree(lineage_path, ignore_errors=True)
+        toks = _tokenize(corpus, text_col, id_col, doc_map_cols)
+        pins = [toks]
+        v = _stats_and_vocabulary(
+            toks, index_dir, id_col, doc_map_cols, salt_threshold,
+            target_salt_postings, cached=False, phases=[], pins=pins,
         )
-        # the three stage-1 artifacts share no dependency — submit the two
-        # side tables from background threads so the quota'd cores stay
-        # busy instead of draining one small write at a time (same
-        # overlap as _build_index_single_shot; outputs byte-identical)
-        bg = [_bg_job(lambda: write_table(dstats, index_dir, "doc_stats"))]
-        if doc_map_cols:
-            dm_sel = corpus.select(id_col, *doc_map_cols)
-            bg.append(_bg_job(lambda: write_table(dm_sel, index_dir, "doc_map")))
-        write_table(dct, index_dir, "dictionary")
-        for th, holder in bg:
-            _bg_join(th, holder)
-
-        dct_r = read_table(spark, index_dir, "dictionary")
-        enriched = (
-            tf.join(dct_r.select("term", "term_id", "n_salts"), "term")
-            .join(dstats, id_col)
-            .withColumn(
-                "salt",
-                F.least(
-                    (F.col(id_col) * F.col("n_salts") / F.lit(n_docs)).cast("int"),
-                    F.col("n_salts") - 1,
-                ).cast("int"),
-            )
-            .withColumn(
-                "part_id",
-                F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_parts)).cast("int"),
-            )
-            .select(
-                "part_id", "term_id", "salt",
-                F.col(id_col).alias("doc_id"), "tf", "dl",
-            )
+        rows, plan = _salted_rows(v, _hot_term_salt(v.n_docs, 0), v.max_salts - 1)
+        rows.select(_part_id(n_parts).alias("part_id"), *plan.pack()).write.mode(
+            "overwrite"
+        ).partitionBy("part_id").parquet(occ_dir)
+        v.terms.select("term", "term_id", "cf", "n_salts").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(staging, "dictionary"))
+        with open(plan_path, "w") as f:
+            json.dump(plan._asdict(), f)
+        # stage completion marker
+        write_table(
+            spark.createDataFrame(
+                [_segments_row(v.n_docs, v.avgdl, k1, b, block_size, n_parts)],
+                SEGMENTS_SCHEMA,
+            ),
+            index_dir, "segments",
         )
-        enriched.write.mode("overwrite").partitionBy("part_id").parquet(staging_dir)
-
-        seg = spark.createDataFrame(
-            [
-                (
-                    FORMAT_VERSION, n_docs, avgdl, float(k1), float(b),
-                    int(block_size), TOKEN_PATTERN, int(n_parts),
-                )
-            ],
-            "format_version int, n_docs long, avgdl double, k1 double, b double, "
-            "block_size int, token_pattern string, n_parts int",
-        )
-        write_table(seg, index_dir, "segments")  # stage-1 completion marker
-        corpus.unpersist()
-
-    done_parts: set[int] = set()
-    if resume and os.path.exists(lineage_path):
-        done_parts = {
-            r.part_id
-            for r in read_table(spark, index_dir, "build_lineage")
-            .filter(F.col("status") == "complete")
-            .collect()
-        }
-
-    # per-part distinct doc counts in ONE column-pruned job (not one per
-    # part): lineage metadata must never multiply the job count — at 10^5
-    # parts the per-part fixed job-submission cost would dominate the build
-    todo = [p for p in range(n_parts) if p not in done_parts]
-    part_docs: dict[int, int] = {}
-    if todo and os.path.exists(staging_dir):
-        part_docs = {
-            r.part_id: r.docs
-            for r in spark.read.parquet(staging_dir)
-            .groupBy("part_id")
-            .agg(F.countDistinct("doc_id").alias("docs"))
-            .collect()
-        }
+        for p in pins:
+            p.unpersist()
 
     committed = 0
-    for p in todo:
-        part_src = os.path.join(staging_dir, f"part_id={p}")
-        if not os.path.exists(part_src):
-            # empty hash bucket — record it complete so resume skips it
+    # the staging directory is removed only after the dictionary is written:
+    # without it, a resumed build has nothing left to do
+    if os.path.exists(plan_path):
+        with open(plan_path) as f:
+            plan = PackPlan(**json.load(f))
+        seg = read_segments(spark, index_dir)
+        done_parts: set[int] = set()
+        if resume and os.path.exists(lineage_path):
+            done_parts = {
+                r.part_id
+                for r in read_table(spark, index_dir, "build_lineage")
+                .filter(F.col("status") == "complete")
+                .collect()
+            }
+        # per-part distinct doc counts in ONE column-pruned job (not one per
+        # part): lineage metadata must never multiply the job count — at
+        # 10^5 parts the per-part fixed job-submission cost would dominate
+        todo = [p for p in range(n_parts) if p not in done_parts]
+        part_docs: dict[int, int] = {}
+        if todo and os.path.exists(occ_dir):
+            part_docs = {
+                r.part_id: r.docs
+                for r in spark.read.parquet(occ_dir)
+                .groupBy("part_id")
+                .agg(F.countDistinct(plan.doc_id()).alias("docs"))
+                .collect()
+            }
+        for p in todo:
+            part_src = os.path.join(occ_dir, f"part_id={p}")
+            postings = nbytes = 0  # an empty hash bucket is complete at once
+            if os.path.exists(part_src):
+                blocks = _encode_exchange(
+                    spark.read.parquet(part_src), plan, block_size,
+                    seg["n_docs"] * seg["avgdl"] / n_parts,
+                )
+                postings, nbytes = _write_blocks(
+                    blocks, os.path.join(postings_path, f"part_id={p}")
+                )
             spark.createDataFrame(
-                [(p, 0, 0, 0, "complete")],
-                "part_id int, docs_indexed long, postings_emitted long, "
-                "bytes_compressed long, status string",
+                [(p, int(part_docs.get(p, 0)), postings, nbytes, "complete")],
+                LINEAGE_SCHEMA,
             ).write.mode("append").parquet(lineage_path)
             committed += 1
-            continue
-        part = spark.read.parquet(part_src)
-        # lineage metrics observed during the write itself (no re-read pass)
-        obs = Observation(f"part_{p}_metrics")
-        blocks = (
-            part.repartition(shuffle_n(part), "term_id", "salt")
-            .mapInPandas(_encode_map_fn(block_size), schema=POSTINGS_SCHEMA)
-            .observe(
-                obs,
-                F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-                (
-                    F.coalesce(F.sum(F.length("doc_ids_packed")), F.lit(0))
-                    + F.coalesce(F.sum(F.length("tfs_packed")), F.lit(0))
-                    + F.coalesce(F.sum(F.length("dls_packed")), F.lit(0))
-                ).alias("bytes"),
-            )
+            if fail_after_parts is not None and committed >= fail_after_parts:
+                raise RuntimeError(f"injected failure after {committed} part commits")
+        _write_dictionary(
+            spark, index_dir, spark.read.parquet(os.path.join(staging, "dictionary"))
         )
-        out_path = os.path.join(table_path(index_dir, "postings"), f"part_id={p}")
-        blocks.write.mode("overwrite").parquet(out_path)
-        m = obs.get
-        lineage_row = spark.createDataFrame(
-            [
-                (
-                    p, int(part_docs.get(p, 0)), int(m["postings"]),
-                    int(m["bytes"]), "complete",
-                )
-            ],
-            "part_id int, docs_indexed long, postings_emitted long, "
-            "bytes_compressed long, status string",
-        )
-        lineage_row.write.mode("append").parquet(lineage_path)
-        committed += 1
-        if fail_after_parts is not None and committed >= fail_after_parts:
-            raise RuntimeError(f"injected failure after {committed} part commits")
+        os.remove(plan_path)
+        shutil.rmtree(staging, ignore_errors=True)
 
-    if not keep_staging:
-        import shutil
-
-        shutil.rmtree(staging_dir, ignore_errors=True)
-
-    lineage = read_table(spark, index_dir, "build_lineage")
-    totals = lineage.agg(
+    totals = read_table(spark, index_dir, "build_lineage").agg(
         F.sum("postings_emitted").alias("postings"),
         F.sum("bytes_compressed").alias("bytes"),
     ).collect()[0]
@@ -744,8 +655,6 @@ def build_index_transcripts(
     from the cached arrays by the two consumers (a vocabulary aggregate and
     the single corpus-sized shuffle). Same output index, byte-for-byte
     (equivalence-tested)."""
-    from ..functions.analysis import tokens_col
-
     pins: list = []
     keep = [c for c in (doc_map_cols or []) if c not in order_cols]
     phases: list = []
@@ -767,9 +676,9 @@ def build_index_transcripts(
         pre = pre.withColumn("doc_id", F.col("doc_id") + F.lit(int(id_offset)))
     try:
         return _build_index_single_shot(
-            pre, index_dir, text_col, "doc_id", doc_map_cols, k1, b,
-            block_size, salt_threshold, target_salt_postings, n_parts,
-            toks_col="_toks", id_offset=id_offset, phases=phases,
+            pre, index_dir, "doc_id", doc_map_cols, k1, b, block_size,
+            salt_threshold, target_salt_postings, n_parts, cached=True,
+            id_offset=id_offset, phases=phases,
         )
     finally:
         for p in pins:
@@ -777,9 +686,8 @@ def build_index_transcripts(
 
 
 def _build_index_single_shot(
-    corpus: DataFrame,
+    toks: DataFrame,
     index_dir: str,
-    text_col: str,
     id_col: str,
     doc_map_cols: list[str] | None,
     k1: float,
@@ -788,378 +696,314 @@ def _build_index_single_shot(
     salt_threshold: int,
     target_salt_postings: int,
     n_parts: int,
-    toks_col: str | None = None,
+    cached: bool,
     id_offset: int = 0,
     phases: list | None = None,
-    exact_df_salts: bool = False,
 ) -> dict:
-    """Fast path: 3-4 Spark jobs total, no staging round-trip.
-
-    Jobs: (1) doc_stats write with n_docs/avgdl observed on the same pass,
-    (2) term-level pre-dictionary (term_id + cf + salt plan) off a
-    map-combined aggregate, (3) optional doc_map write, (4) THE shuffle:
-    raw (term_id, salt, doc_id, dl) occurrences repartitioned by
-    (part_id, term_id, salt), tf aggregated IN the vectorized encoder,
-    blocks written (metrics observed in-flight), (5) dictionary finalized
-    with exact df summed from the blocks' meta columns (column-pruned
-    scan, never touches the packed payloads).
-
-    Single-shuffle design: a separate tf-groupBy exchange would move the
-    same ~N_postings rows once more; aggregating on the reduce side of the
-    one term-partitioned shuffle halves corpus-sized shuffle volume — the
-    difference between one and two full passes over 100 TB. ``n_salts``
-    derives from cf (≥ df), so hot terms split at least as much as the
-    df-based checkpointed path — slight over-salting is harmless (blocks
-    stay doc-range-disjoint), under-salting would not be.
-
-    The output layout is scheme-identical to the checkpointed path
-    (equivalence is tested)."""
-    spark = corpus.sparkSession
-    from pyspark import StorageLevel
-
-    from ..functions.analysis import tokens_col
-
-    own_persists: list = []
-    if toks_col is None:
-        # tokenize EXACTLY once into a narrow cached projection (doc_id,
-        # token array [, doc_map cols]) — the SAME shape the fused
-        # transcripts path pins. Every consumer re-derives what it needs
-        # from the cached arrays: doc_stats is size(_toks) (no
-        # occurrence-groupBy + corpus join — that shape paid one extra
-        # corpus-sized shuffle purely to recover dl, and empty docs now
-        # carry empty arrays for free), the vocabulary aggregate and the
-        # encode exchange explode lazily (two cheap explodes beat caching
-        # the 30×-wider exploded relation; at cluster scale
-        # MEMORY_AND_DISK spills gracefully instead of OOMing).
-        keep = [c for c in (doc_map_cols or []) if c != id_col]
-        corpus = corpus.select(
-            F.col(id_col), tokens_col(text_col).alias("_toks"), *keep
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        own_persists.append(corpus)
-        toks_col = "_toks"
-        occ = corpus.select(
-            F.col(id_col).alias("doc_id"),
-            F.size("_toks").alias("dl"),
-            F.explode("_toks").alias("term"),
-        )
-        dstats = corpus.select(
-            F.col(id_col).alias("doc_id"), F.size("_toks").cast("long").alias("dl")
-        )
-        # the cache is populated by the FIRST consumer (the sequential
-        # doc_stats write below), unlike the fused path where the caller
-        # materialized it eagerly — keep overlap off (see ds_thread gate)
-        overlap_stats = False
-    else:
-        # pre-tokenized fused path (build_index_transcripts): the caller
-        # already pinned the narrow token relation — occurrences are
-        # RE-DERIVED lazily from the cached arrays by each consumer (two
-        # cheap explodes beat caching the 30×-wider exploded relation), and
-        # doc_stats needs no join (empty docs carry empty arrays)
-        occ = corpus.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(toks_col).alias("dl"),
-            F.explode(toks_col).alias("term"),
-        )
-        dstats = corpus.select(
-            F.col(id_col).alias("doc_id"), F.size(toks_col).cast("long").alias("dl")
-        )
-        overlap_stats = True
+    """Stages 2-6 over the stage-1 token relation ``toks``, with one encode
+    job and no staging round-trip: the doc_stats write, the vocabulary's
+    dense-id passes, an optional doc_map write, the encode write and the
+    dictionary write, with the meta writes overlapping the last. ``cached``
+    says ``toks`` is already materialized, so the doc_stats write can
+    overlap the vocabulary job."""
+    spark = toks.sparkSession
     if phases is None:
         phases = []
+    pins: list = []
+    v = _stats_and_vocabulary(
+        toks, index_dir, id_col, doc_map_cols, salt_threshold,
+        target_salt_postings, cached=cached, phases=phases, pins=pins,
+    )
+    rows, plan = _salted_rows(
+        v, _hot_term_salt(v.n_docs, id_offset), v.max_salts - 1
+    )
+    t = time.perf_counter()
+    blocks = _encode_exchange(
+        rows.select(*plan.pack()), plan, block_size, v.n_docs * v.avgdl
+    ).withColumn("part_id", _part_id(n_parts))
+    postings, nbytes = _write_blocks(blocks, table_path(index_dir, "postings"), "part_id")
+    phases.append(("encode_shuffle_write", time.perf_counter() - t))
+    _write_dictionary_and_meta(
+        spark, index_dir, v, postings, nbytes,
+        _segments_row(v.n_docs, v.avgdl, k1, b, block_size, n_parts),
+        SEGMENTS_SCHEMA, phases,
+    )
+    for p in pins:
+        p.unpersist()
+    return {
+        "parts": n_parts,
+        "parts_built": n_parts,
+        "postings_emitted": postings,
+        "bytes_compressed": nbytes,
+        "phase_secs": {k: round(s, 3) for k, s in phases},
+    }
 
-    def _tick(name: str, t0: float) -> None:
-        phases.append((name, time.perf_counter() - t0))
 
-    obs_stats = Observation("corpus_stats")
-    dstats = dstats.observe(
-        obs_stats, F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
-        # doc_id/dl maxima ride the same pass for free: they size the
-        # packed exchange row's shift widths (and gate its feasibility)
+def _tokenize(
+    corpus: DataFrame, text_col: str, id_col: str, doc_map_cols: list[str] | None
+) -> DataFrame:
+    """Stage 1: tokenize EXACTLY once into the narrow cached projection
+    (id, ``_toks`` [, doc_map cols]) — the shape the fused transcripts build
+    pins. Consumers re-derive what they need from the cached arrays: two
+    cheap explodes beat caching the 30×-wider exploded relation, and at
+    cluster scale MEMORY_AND_DISK spills gracefully instead of OOMing. The
+    cache is populated by its first consumer."""
+    keep = [c for c in (doc_map_cols or []) if c != id_col]
+    return corpus.select(
+        F.col(id_col), tokens_col(text_col).alias("_toks"), *keep
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+class _Vocab(NamedTuple):
+    """What stages 2-3 leave for the exchange."""
+
+    occ: DataFrame  # (doc_id, dl, term), re-derived lazily from the token cache
+    terms: DataFrame  # persisted (term, cf, n_salts, term_id)
+    n_docs: int
+    avgdl: float
+    min_doc: int
+    max_doc: int
+    max_dl: int
+    n_terms: int
+    max_salts: int
+
+
+def _timed(phases: list, name: str, fn):
+    def run() -> None:
+        t = time.perf_counter()
+        fn()
+        phases.append((name, time.perf_counter() - t))
+
+    return run
+
+
+def _stats_and_vocabulary(
+    toks: DataFrame,
+    index_dir: str,
+    id_col: str,
+    doc_map_cols: list[str] | None,
+    salt_threshold: int | None,
+    target_salt_postings: int | None,
+    *,
+    cached: bool,
+    phases: list,
+    pins: list,
+) -> _Vocab:
+    """Stages 2-3: write doc_stats and doc_map, and build the vocabulary
+    with its salt plan. ``salt_threshold=None`` turns hot-term salting off
+    (n_salts ≡ 1) for a caller whose salt is a doc-range bucket. The
+    persisted vocabulary and the dense-id pins are appended to ``pins``."""
+    occ = toks.select(
+        F.col(id_col).alias("doc_id"),
+        F.size("_toks").alias("dl"),
+        F.explode("_toks").alias("term"),
+    )
+    obs = Observation()
+    dstats = toks.select(
+        F.col(id_col).alias("doc_id"), F.size("_toks").cast("long").alias("dl")
+    ).observe(
+        obs, F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
+        # the doc_id/dl extremes ride the same pass for free: they size the
+        # pack plan's shift widths (and gate its feasibility)
         F.max("dl").alias("max_dl"),
         F.max("doc_id").alias("max_doc"), F.min("doc_id").alias("min_doc"),
     )
-    # doc_map is independent of every other pre-encode artifact (it reads
-    # only the cached corpus projection), so its write overlaps the
-    # doc_stats/term_ids/pack critical path instead of serializing behind
-    # it (phase wall times below therefore overlap; build_sec is the truth)
-    dm_thread = dm_holder = None
+    # doc_map reads only the token relation, so its write overlaps the
+    # critical path instead of serializing behind it (phase wall times
+    # therefore overlap; build_sec is the truth)
+    bg = []
     if doc_map_cols:
-        dm_sel = corpus.select(id_col, *doc_map_cols)
-
-        def _write_doc_map() -> None:
-            t_dm = time.perf_counter()
-            write_table(dm_sel, index_dir, "doc_map")
-            _tick("doc_map_write", t_dm)
-
-        dm_thread, dm_holder = _bg_job(_write_doc_map)
-    # doc_stats and the term-id pre-dictionary are independent jobs over
-    # the SAME populated cache: on the fused path (overlap_stats — the
-    # token relation was materialized by assign_dense_ids upstream) the
-    # doc_stats write runs from a background thread so its wall overlaps
-    # the term_ids phase. A >1-core leg back-fills idle cores with the
-    # second job's tasks (guide-§2.6 overlap); a 1-core leg simply runs
-    # them back to back, so the overlap only ever improves the serial
-    # share. The self-tokenizing path keeps the sequential order: its
-    # first consumer POPULATES the token cache, and two concurrent first
-    # consumers would tokenize every partition twice.
-    ds_thread = ds_holder = None
-
-    def _write_doc_stats() -> None:
-        t_ds = time.perf_counter()
-        write_table(dstats, index_dir, "doc_stats")
-        _tick("doc_stats_write", t_ds)
-
-    if overlap_stats:
-        ds_thread, ds_holder = _bg_job(_write_doc_stats)
+        dm_sel = toks.select(id_col, *doc_map_cols)
+        bg.append(_bg_job(_timed(
+            phases, "doc_map_write", lambda: write_table(dm_sel, index_dir, "doc_map")
+        )))
+    # doc_stats and the vocabulary are independent jobs over the SAME
+    # cache. When it is already populated, the doc_stats write runs from a
+    # background thread so its wall overlaps the vocabulary job (a >1-core
+    # leg back-fills idle cores with the second job's tasks; a 1-core leg
+    # runs them back to back). Otherwise doc_stats goes first and populates
+    # the cache: two concurrent first consumers would tokenize every
+    # partition twice.
+    write_stats = _timed(
+        phases, "doc_stats_write", lambda: write_table(dstats, index_dir, "doc_stats")
+    )
+    if cached:
+        bg.append(_bg_job(write_stats))
     else:
-        _write_doc_stats()
-        st = obs_stats.get
+        write_stats()
 
-    # pre-dictionary: term_id (dense, lexicographic) + cf + salt plan; one
-    # aggregated shuffle whose output is vocabulary-, not corpus-, sized.
-    # With exact_df_salts the aggregate also carries countDistinct(doc_id)
-    # so n_salts (and therefore the block layout) matches the checkpointed
-    # path's df-based plan exactly — and the final dictionary df needs no
-    # post-encode recompute pass.
-    agg_cols = [F.count("*").cast("long").alias("cf")]
-    if exact_df_salts:
-        agg_cols.append(F.countDistinct("doc_id").cast("long").alias("df"))
-    dct_pre = (
+    # one aggregated shuffle whose output is vocabulary-, not corpus-,
+    # sized; the vocabulary size and max n_salts ride assign_dense_ids' own
+    # count collect (no separate pack-plan aggregate job)
+    n_salts = (
+        F.lit(1)
+        if salt_threshold is None
+        else F.when(
+            F.col("cf") > salt_threshold,
+            F.ceil(F.col("cf") / F.lit(target_salt_postings)).cast("int"),
+        ).otherwise(F.lit(1))
+    )
+    terms = (
         occ.groupBy("term")
-        .agg(*agg_cols)
-        .withColumn(
-            "n_salts",
-            F.when(
-                F.col("df" if exact_df_salts else "cf") > salt_threshold,
-                F.ceil(
-                    F.col("df" if exact_df_salts else "cf")
-                    / F.lit(target_salt_postings)
-                ).cast("int"),
-            ).otherwise(F.lit(1)),
-        )
+        .agg(F.count("*").cast("long").alias("cf"))
+        .withColumn("n_salts", n_salts)
     )
-    pins: list = []
     t = time.perf_counter()
-    # vocabulary size + max n_salts ride assign_dense_ids' own count
-    # collect (no separate pack-plan aggregate job)
-    nv_out: list = []
+    n_out: list = []
     mx_out: dict = {}
-    dct_pre = assign_dense_ids(
-        dct_pre, ["term"], id_col="term_id", pins=pins,
-        n_out=nv_out, max_of={"n_salts": F.col("n_salts")}, max_out=mx_out,
+    terms = assign_dense_ids(
+        terms, ["term"], id_col="term_id", pins=pins,
+        n_out=n_out, max_of={"n_salts": F.col("n_salts")}, max_out=mx_out,
     ).persist()
-    _tick("term_ids", t)
-    if ds_thread is not None:
-        _bg_join(ds_thread, ds_holder)
-        st = obs_stats.get
-    n_docs, avgdl = int(st["n"]), float(st["avgdl"])
-    max_dl = int(st["max_dl"] or 0)
-    max_doc, min_doc = int(st["max_doc"] or 0), int(st["min_doc"] or 0)
+    pins.append(terms)
+    phases.append(("term_ids", time.perf_counter() - t))
+    for job in bg:
+        _bg_join(*job)
+    st = obs.get
+    return _Vocab(
+        occ, terms, int(st["n"]), float(st["avgdl"]),
+        int(st["min_doc"] or 0), int(st["max_doc"] or 0), int(st["max_dl"] or 0),
+        int(n_out[0]), int(mx_out.get("n_salts") or 1),
+    )
 
-    enriched = (
-        occ.join(F.broadcast(dct_pre.select("term", "term_id", "n_salts")), "term")
-        # salt from the SHARD-LOCAL rank (doc_id - id_offset): a sharded
-        # build's ids start at its global offset, and salting must span the
-        # shard's own [0, n_docs) range to keep doc-range sub-lists balanced
-        .withColumn(
-            "salt",
-            F.least(
-                ((F.col("doc_id") - F.lit(int(id_offset))) * F.col("n_salts")
-                 / F.lit(n_docs)).cast("int"),
-                F.col("n_salts") - 1,
-            ).cast("int"),
-        )
+
+def _hot_term_salt(n_docs: int, id_offset: int) -> Column:
+    """Stage 3's salt plan applied to an occurrence: the term's doc range
+    split into ``n_salts`` equal sub-ranges of the shard-local rank
+    ``doc_id - id_offset`` (a shard's ids start at its global offset, and
+    its salts must span its own [0, n_docs) to stay balanced)."""
+    return F.least(
+        ((F.col("doc_id") - F.lit(int(id_offset))) * F.col("n_salts")
+         / F.lit(n_docs)).cast("int"),
+        F.col("n_salts") - 1,
+    ).cast("int")
+
+
+def _salted_rows(v: _Vocab, salt: Column, max_salt: int) -> tuple[DataFrame, PackPlan]:
+    """Stage 4: the (term_id, salt, doc_id, dl) occurrence rows, and the
+    pack plan for them from the observed widths (``max_salt`` bounds
+    ``salt``)."""
+    rows = v.occ.join(
+        F.broadcast(v.terms.select("term", "term_id", "n_salts")), "term"
+    ).withColumn("salt", salt)
+    return rows, PackPlan.choose(v.n_terms, max_salt, v.min_doc, v.max_doc, v.max_dl)
+
+
+def _part_id(n_parts: int) -> Column:
+    """A (term_id, salt) run's hive bucket. The single-shot build derives it
+    over the ~block_size×-smaller block relation after encoding: shipping
+    it on every occurrence row costs ~17 % more exchange bytes for a
+    high-entropy value the shuffle codec cannot compress."""
+    return F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_parts)).cast("int")
+
+
+def _encode_exchange(
+    rows: DataFrame, plan: PackPlan, block_size: int, n_rows: float,
+    by_salt: bool = False,
+) -> DataFrame:
+    """Stage 5: THE corpus-sized shuffle of packed exchange rows, sorted on
+    the JVM side into the presorted encoder; returns the block relation.
+    The partition count derives from the expected row count ``n_rows``,
+    capped at the configured cluster-sized value, so tiny corpora stop
+    paying 32 task+worker fixed costs per build."""
+    return (
+        rows.repartition(sized_shuffle_n(rows, n_rows), *plan.route(by_salt))
+        .sortWithinPartitions(*plan.names)
+        .mapInPandas(_encode_occ_map_fn(block_size, plan), schema=POSTINGS_SCHEMA)
     )
-    # PACKED exchange row: ts = term_id << salt_bits | salt, dd = doc_id
-    # << dl_bits | dl — two int64 slots instead of four halves the
-    # UnsafeRow payload the corpus-sized shuffle writes/reads/sorts, and
-    # both packs are order-preserving, so sorting (ts, dd) IS sorting
-    # (term_id, salt, doc_id). Shift widths come from driver-known maxima
-    # (vocab size + max n_salts off the cached pre-dictionary, max dl /
-    # doc_id observed on the doc_stats pass); if the input could overflow
-    # a 63-bit pack (absurd ids) the build falls back to the 4-column row.
-    t = time.perf_counter()
-    vocab_n = int(nv_out[0])
-    max_salts = int(mx_out.get("n_salts") or 1)
-    salt_bits = max(1, (max(max_salts - 1, 1)).bit_length())
-    dl_bits = max(1, max(max_dl, 1).bit_length())
-    doc_bits = max(1, max(max_doc, 1).bit_length())
-    max_ts = ((vocab_n - 1) << salt_bits) + (1 << salt_bits) - 1
-    packable = (
-        min_doc >= 0
-        and max_ts < (1 << 63)
-        and (max_doc << dl_bits) + max_dl < (1 << 63)
-    )
-    # ONE-column pack when every field fits 63 bits together: 16 B/row
-    # through the corpus-sized exchange instead of 24, and a single-long
-    # sort key (JV_PACK=2 forces the two-column row for A/B runs)
-    packable1 = (
-        packable
-        and os.environ.get("JV_PACK") != "2"
-        and (max_ts << (doc_bits + dl_bits)) + (1 << (doc_bits + dl_bits)) - 1
-        < (1 << 63)
-    )
-    phases.append(("pack_plan", time.perf_counter() - t))
-    if dm_thread is not None:
-        # join before the encode write: the Arrow batch-size override below
-        # is session-global, and the corpus-sized exchange deserves the
-        # whole quota anyway
-        _bg_join(dm_thread, dm_holder)
-    if packable1:
-        dd_width = doc_bits + dl_bits
-        enriched = enriched.select(
-            (
-                F.shiftleft(
-                    F.shiftleft("term_id", salt_bits) + F.col("salt").cast("long"),
-                    dd_width,
-                )
-                + F.shiftleft(F.col("doc_id"), dl_bits)
-                + F.col("dl")
-            ).alias("tsdd"),
-        )
-        # partition on the ts prefix (injective in (term, salt)): same
-        # group co-location and hot-term salt spreading as the 2-col row
-        part_cols = [F.shiftright("tsdd", dd_width)]
-        sort_cols = ["tsdd"]
-        encode_fn = _encode_occ_map_fn(
-            block_size, presorted=True, carry_part_id=False,
-            packed1_bits=(salt_bits, doc_bits, dl_bits),
-        )
-    elif packable:
-        enriched = enriched.select(
-            (F.shiftleft("term_id", salt_bits)
-             + F.col("salt").cast("long")).alias("ts"),
-            (F.shiftleft(F.col("doc_id"), dl_bits)
-             + F.col("dl")).alias("dd"),
-        )
-        # ts is injective in (term_id, salt), so partitioning on it alone
-        # both co-locates each (term, salt) group and still SPLITS a hot
-        # term's salts across partitions
-        part_cols, sort_cols = ["ts"], ["ts", "dd"]
-        encode_fn = _encode_occ_map_fn(
-            block_size, presorted=True, carry_part_id=False,
-            packed_bits=(salt_bits, dl_bits),
-        )
-    else:
-        enriched = enriched.select("term_id", "salt", "doc_id", "dl")
-        part_cols = ["term_id", "salt"]
-        sort_cols = ["term_id", "salt", "doc_id"]
-        encode_fn = _encode_occ_map_fn(
-            block_size, presorted=True, carry_part_id=False
-        )
-    obs = Observation("build_metrics")
-    blocks = (
-        # sort on the JVM side of the exchange: Tungsten's off-heap sort is
-        # cache-efficient and keeps scaling when several workers share a
-        # socket, so the Arrow worker gets run-length-reducible input and
-        # never sorts (presorted=True) — the python lexsort it replaces was
-        # the build's main memory-bandwidth hog.
-        # part_id = pmod(xxhash64(term_id, salt), n_parts) is recomputed
-        # below over the ~block_size×-smaller block relation — shipping it
-        # per occurrence cost ~17 % more exchange bytes for a high-entropy
-        # value the codec can't compress.
-        # partition count derived from the observed occurrence count
-        # (n_docs × avgdl), capped at the configured cluster-sized value:
-        # tiny corpora stop paying 32 task+worker fixed costs per build
-        enriched.repartition(
-            sized_shuffle_n(enriched, n_docs * avgdl), *part_cols
-        )
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(encode_fn, schema=POSTINGS_SCHEMA)
-        .withColumn(
-            "part_id",
-            F.pmod(F.xxhash64("term_id", "salt"), F.lit(n_parts)).cast("int"),
-        )
-        .observe(
-            obs,
-            F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-            (
-                F.coalesce(F.sum(F.length("doc_ids_packed")), F.lit(0))
-                + F.coalesce(F.sum(F.length("tfs_packed")), F.lit(0))
-                + F.coalesce(F.sum(F.length("dls_packed")), F.lit(0))
-            ).alias("bytes"),
-        )
-    )
-    t = time.perf_counter()
-    # large Arrow batches for the encode exchange only: occurrence rows are
-    # ~40 B wide, so 128k-row batches are ~5 MB — far fewer IPC round-trips
-    # and allocator churn per partition. Scoped + restored so mapInPandas
-    # surfaces with wide rows (multimodal binary) keep the session default.
-    # _ARROW_BATCH_LOCK: the override mutates session-global runtime conf;
-    # two concurrent builds sharing one SparkSession would otherwise race
-    # the set/restore and could leave 128k batches applied to an unrelated
-    # wide-row mapInPandas job (ADVICE r4)
+
+
+def _write_blocks(
+    blocks: DataFrame, path: str, partition_by: str | None = None
+) -> tuple[int, int]:
+    """Write the block relation — the job that runs the encode exchange —
+    and return (postings, packed payload bytes), observed during the write
+    itself (no re-read pass).
+
+    The large Arrow batches are scoped to this write, so mapInPandas
+    surfaces with wide rows (multimodal binary) keep the session default.
+    The override mutates session-global runtime conf, so
+    ``_ARROW_BATCH_LOCK`` keeps two concurrent builds sharing one
+    SparkSession from racing the set/restore (which could leave 128k
+    batches applied to an unrelated wide-row job)."""
+    spark = blocks.sparkSession
+    obs = Observation()
+    writer = blocks.observe(
+        obs,
+        F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
+        (
+            F.coalesce(F.sum(F.length("doc_ids_packed")), F.lit(0))
+            + F.coalesce(F.sum(F.length("tfs_packed")), F.lit(0))
+            + F.coalesce(F.sum(F.length("dls_packed")), F.lit(0))
+        ).alias("bytes"),
+    ).write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
     arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     with _ARROW_BATCH_LOCK:
         try:
             arrow_prev = spark.conf.get(arrow_key)
         except Exception:  # noqa: BLE001
             arrow_prev = None
-        spark.conf.set(arrow_key, os.environ.get("JV_ARROW_BATCH", "131072"))
+        spark.conf.set(arrow_key, str(ENCODE_ARROW_BATCH))
         try:
-            blocks.write.mode("overwrite").partitionBy("part_id").parquet(
-                table_path(index_dir, "postings")
-            )
+            writer.parquet(path)
         finally:
             if arrow_prev is None:
                 spark.conf.unset(arrow_key)
             else:
                 spark.conf.set(arrow_key, arrow_prev)
-    _tick("encode_shuffle_write", t)
     m = obs.get
+    return int(m["postings"]), int(m["bytes"])
 
-    if exact_df_salts:
-        # df already exact in the pre-dictionary (countDistinct) — no
-        # post-encode recompute pass over the postings meta needed
-        dct_final = dct_pre.select("term", "term_id", "df", "cf", "n_salts")
-    else:
-        # finalize dictionary: exact df from block meta (column-pruned scan)
-        dfreq = (
-            read_table(spark, index_dir, "postings")
-            .groupBy("term_id")
-            .agg(F.sum("n").cast("long").alias("df"))
-        )
-        dct_final = dct_pre.join(dfreq, "term_id").select(
-            "term", "term_id", "df", "cf", "n_salts"
-        )
-    # lineage + segments depend only on the (already-observed) encode
-    # metrics, not on the dictionary — overlap them with the dictionary
-    # finalize. One job-level lineage row (part_id = -1 marks "all parts,
-    # one commit").
-    def _write_meta() -> None:
-        t_m = time.perf_counter()
+
+def _write_dictionary(spark: SparkSession, index_dir: str, terms: DataFrame) -> None:
+    """The final dictionary: the vocabulary with exact df summed from the
+    postings' block meta (a column-pruned scan that never touches the
+    packed payloads)."""
+    dfreq = (
+        read_table(spark, index_dir, "postings")
+        .groupBy("term_id")
+        .agg(F.sum("n").cast("long").alias("df"))
+    )
+    write_table(
+        terms.join(dfreq, "term_id").select("term", "term_id", "df", "cf", "n_salts"),
+        index_dir, "dictionary",
+    )
+
+
+def _segments_row(
+    n_docs: int, avgdl: float, k1: float, b: float, block_size: int, n_parts: int
+) -> tuple:
+    return (
+        FORMAT_VERSION, n_docs, avgdl, float(k1), float(b), int(block_size),
+        TOKEN_PATTERN, int(n_parts),
+    )
+
+
+def _write_dictionary_and_meta(
+    spark: SparkSession,
+    index_dir: str,
+    v: _Vocab,
+    postings: int,
+    nbytes: int,
+    segments: tuple,
+    segments_schema: str,
+    phases: list,
+) -> None:
+    """Stage 6's tail for a one-job build. Lineage and segments depend only
+    on the already-observed encode metrics, not on the dictionary, so they
+    overlap the dictionary finalize. One job-level lineage row (part_id =
+    -1 marks "all parts, one commit")."""
+
+    def write_meta() -> None:
         spark.createDataFrame(
-            [(-1, n_docs, int(m["postings"]), int(m["bytes"]), "complete")],
-            "part_id int, docs_indexed long, postings_emitted long, "
-            "bytes_compressed long, status string",
+            [(-1, v.n_docs, postings, nbytes, "complete")], LINEAGE_SCHEMA
         ).write.mode("overwrite").parquet(table_path(index_dir, "build_lineage"))
-        seg = spark.createDataFrame(
-            [
-                (
-                    FORMAT_VERSION, n_docs, avgdl, float(k1), float(b),
-                    int(block_size), TOKEN_PATTERN, int(n_parts),
-                )
-            ],
-            "format_version int, n_docs long, avgdl double, k1 double, "
-            "b double, block_size int, token_pattern string, n_parts int",
+        write_table(
+            spark.createDataFrame([segments], segments_schema), index_dir, "segments"
         )
-        write_table(seg, index_dir, "segments")
-        _tick("meta_writes", t_m)
 
-    meta_thread, meta_holder = _bg_job(_write_meta)
-    t = time.perf_counter()
-    write_table(dct_final, index_dir, "dictionary")
-    _tick("dictionary_write", t)
-    _bg_join(meta_thread, meta_holder)
-    dct_pre.unpersist()
-    for p in pins:
-        p.unpersist()
-    for p in own_persists:
-        p.unpersist()
-    return {
-        "parts": n_parts,
-        "parts_built": n_parts,
-        "postings_emitted": int(m["postings"]),
-        "bytes_compressed": int(m["bytes"]),
-        "phase_secs": {k: round(v, 3) for k, v in phases},
-    }
+    meta = _bg_job(_timed(phases, "meta_writes", write_meta))
+    _timed(phases, "dictionary_write", lambda: _write_dictionary(spark, index_dir, v.terms))()
+    _bg_join(*meta)

@@ -51,7 +51,9 @@ def extend_index(
 ) -> dict:
     """Append ``new_corpus`` (raw rows, no doc_id yet unless ``order_cols``
     is None and a ``doc_id`` column exists) to the index at ``index_dir``.
-    Returns delta metrics."""
+    Returns delta metrics. Caller-provided doc_ids must be ≥ the index's
+    n_docs; otherwise ``ValueError`` is raised before anything is
+    written."""
     spark = new_corpus.sparkSession
     seg = read_segments(spark, index_dir)
     if seg.get("layout") == "doc":
@@ -70,14 +72,21 @@ def extend_index(
             new_corpus, order_cols, "doc_id", pins=pins
         ).withColumn("doc_id", F.col("doc_id") + F.lit(n_old))
     else:
-        delta = new_corpus  # caller-provided doc_id must be >= n_old
+        delta = new_corpus
     delta = delta.persist()
-    m = delta.count()
-    if m == 0:
+    # the lowest id rides the count job: caller-provided ids below n_old
+    # would duplicate doc_stats rows and overlap existing blocks' doc ranges
+    m, min_id = delta.agg(F.count("*"), F.min("doc_id")).collect()[0]
+    if m == 0 or min_id < n_old:
         delta.unpersist()
         for p in pins:
             p.unpersist()
-        return {"docs_added": 0, "postings_emitted": 0, "bytes_compressed": 0}
+        if m == 0:
+            return {"docs_added": 0, "postings_emitted": 0, "bytes_compressed": 0}
+        raise ValueError(
+            f"extend_index: new doc_id {min_id} is below the index's n_docs "
+            f"{n_old}; new documents need ids >= n_docs"
+        )
 
     tf_new = term_freq(delta, text_col, "doc_id")
     dstats_new = doc_stats(delta, text_col, "doc_id")

@@ -792,10 +792,19 @@ def tfidf_topk_indexed(
     contrib = (
         F.col("weight") * F.col("idf") * (F.lit(1.0) + F.log(F.col("tf")))
     )
+    # each doc's contributions are summed in ascending order: F.sum adds
+    # them in arrival order, which follows the index's block layout, so two
+    # docs with equal contributions could differ by an ulp and swap places
+    # under the (score desc, doc_id asc) tie-break
     scored = (
         decoded.withColumn("contrib", contrib)
         .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
+        .agg(
+            F.aggregate(
+                F.array_sort(F.collect_list("contrib")), F.lit(0.0),
+                lambda acc, x: acc + x,
+            ).alias("score")
+        )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

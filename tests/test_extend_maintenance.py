@@ -142,6 +142,32 @@ def test_new_terms_in_delta_are_searchable(spark, split_corpus):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_extend_rejects_ids_below_n_docs(spark, split_corpus, tmp_path):
+    """Caller-provided doc_ids (order_cols=None) must start at the index's
+    n_docs: an overlapping batch raises before anything is written."""
+    import os
+
+    from jvector_spark.index.build import build_index
+    from jvector_spark.index.extend import extend_index
+
+    base, _ = split_corpus
+    d = str(tmp_path / "overlap")
+    build_index(base, d, n_parts=2, checkpointed=False)
+
+    def files():
+        out = {}
+        for root, _dirs, names in os.walk(d):
+            for n in names:
+                with open(os.path.join(root, n), "rb") as fh:
+                    out[os.path.relpath(os.path.join(root, n), d)] = fh.read()
+        return out
+
+    before = files()
+    with pytest.raises(ValueError, match="below the index's n_docs"):
+        extend_index(base.filter(F.col("doc_id") >= 1990), d)
+    assert files() == before
+
+
 def test_delete_masks_results_and_compact_rewrites(spark, corpus, qterms):
     from jvector_spark.index.build import build_index
     from jvector_spark.index.maintenance import compact_index, delete_docs

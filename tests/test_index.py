@@ -192,6 +192,23 @@ def test_lineage_reconciles(spark, corpus, index_dir):
     assert lineage.agg(F.sum("bytes_compressed")).collect()[0][0] > 0
 
 
+def _index_rows(spark, d):
+    """Sorted dictionary rows and full posting-block rows (meta columns plus
+    the three packed payloads) of the index at ``d``."""
+    from jvector_spark.index.storage import read_table
+
+    def rows(table, cols):
+        return sorted(tuple(r) for r in read_table(spark, d, table).select(*cols).collect())
+
+    return rows("dictionary", ["term", "term_id", "df", "cf", "n_salts"]), rows(
+        "postings",
+        [
+            "part_id", "term_id", "salt", "block_id", "n", "base", "max_doc_id",
+            "max_tf", "min_dl", "doc_ids_packed", "tfs_packed", "dls_packed",
+        ],
+    )
+
+
 def test_build_resume_after_injected_failure(spark, corpus, tmp_path, query_set):
     from jvector_spark.index.build import build_index
     from jvector_spark.index.query import bm25_topk_indexed
@@ -199,10 +216,14 @@ def test_build_resume_after_injected_failure(spark, corpus, tmp_path, query_set)
 
     d = str(tmp_path / "idx_resume")
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(corpus, d, n_parts=4, fail_after_parts=2, keep_staging=True)
+        build_index(corpus, d, n_parts=4, fail_after_parts=2)
     # resume completes the remaining parts without redoing stage 1
     metrics = build_index(corpus, d, n_parts=4, resume=True)
     assert metrics["parts_built"] == 2
+    # the resumed index equals a one-job build row for row
+    one = str(tmp_path / "idx_one_job")
+    build_index(corpus, one, n_parts=4, checkpointed=False)
+    assert _index_rows(spark, d) == _index_rows(spark, one)
 
     qdf = queries_df(
         spark, list(zip(query_set["query_id"][:8], [list(t) for t in query_set["terms"][:8]]))
@@ -271,9 +292,10 @@ def test_oov_query_batch_returns_empty(spark, index_dir):
 
 
 def test_single_shot_build_equals_checkpointed(spark, corpus, index_dir, query_set, tmp_path):
-    """checkpointed=False must produce a logically identical index: same
-    segments stats, same decoded postings, same top-k (fast-path == slow-
-    path idiom, the TestFusedGraphIndex equality analog)."""
+    """checkpointed=False must produce an identical index: same segments
+    stats, dictionary rows, posting blocks byte for byte, decoded postings
+    and top-k (fast-path == slow-path idiom, the TestFusedGraphIndex
+    equality analog)."""
     from jvector_spark.index.build import build_index
     from jvector_spark.index.query import bm25_topk_indexed, decode_postings
     from jvector_spark.index.storage import read_segments
@@ -286,6 +308,7 @@ def test_single_shot_build_equals_checkpointed(spark, corpus, index_dir, query_s
     )
     a, b = read_segments(spark, index_dir), read_segments(spark, d)
     assert a == b
+    assert _index_rows(spark, d) == _index_rows(spark, index_dir)
     cnt = lambda p: decode_postings(spark, p).count()  # noqa: E731
     assert cnt(d) == cnt(index_dir)
     qdf = queries_df(
@@ -350,3 +373,57 @@ def test_fused_transcripts_build_equals_chained(spark, transcripts, corpus, quer
         for r in bm25_topk_indexed(spark, d2, qdf, k=10).collect()
     )
     assert ga == gb
+
+
+@pytest.mark.parametrize(
+    "lo, hi, cols", [(0, 5_000, 1), ((1 << 50) - 5_000, 1 << 50, 2), (-2_500, 2_500, 4)]
+)
+def test_pack_plans_encode_identically(spark, lo, hi, cols):
+    """Each exchange row the pack plan can choose (one int64, two int64s,
+    the 4-column fallback) goes through the presorted encoder to exactly
+    the blocks the reference encoder emits from the tf-aggregated rows."""
+    import numpy as np
+    import pandas as pd
+
+    from jvector_spark.index.build import (
+        PackPlan,
+        _encode_occ_map_fn,
+        encode_partition_pdf,
+    )
+
+    rng = np.random.default_rng(7)
+    n = 6_000
+    occ = pd.DataFrame({
+        "term_id": rng.integers(0, 40, n),
+        "salt": rng.integers(0, 3, n).astype(np.int32),
+        "doc_id": rng.integers(lo, hi, n),
+    })
+    occ["dl"] = occ["doc_id"] % 97 + 1  # a function of the doc, as in a build
+    plan = PackPlan.choose(40, 2, int(occ["doc_id"].min()), int(occ["doc_id"].max()), 97)
+    assert plan.cols == cols
+    rows = (
+        spark.createDataFrame(occ).select(*plan.pack()).orderBy(*plan.names).toPandas()
+    )
+    got = pd.concat(list(_encode_occ_map_fn(128, plan)(iter([rows]))), ignore_index=True)
+    tf = occ.groupby(["term_id", "salt", "doc_id", "dl"]).size().rename("tf").reset_index()
+    want = encode_partition_pdf(tf, block_size=128).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_tfidf_indexed_independent_of_block_layout(spark, corpus, index_dir, query_set, tmp_path):
+    """TF-IDF top-k over two physical layouts of the same corpus (salted
+    4-part vs unsalted 2-part) is bit-identical: a doc's score must not
+    depend on the order its blocks are decoded in."""
+    from jvector_spark.index.build import build_index
+    from jvector_spark.index.query import tfidf_topk_indexed
+    from jvector_spark.operators.topk import queries_df
+
+    d = str(tmp_path / "unsalted")
+    build_index(corpus, d, n_parts=2, checkpointed=False)
+    qdf = queries_df(
+        spark, list(zip(query_set["query_id"], [list(t) for t in query_set["terms"]]))
+    )
+    rows = lambda p: sorted(  # noqa: E731
+        tuple(r) for r in tfidf_topk_indexed(spark, p, qdf, k=10).collect()
+    )
+    assert rows(index_dir) == rows(d)
